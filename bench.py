@@ -3,7 +3,8 @@
 
 Headline metric: end-to-end validated documents/sec (verdicts + violation
 rows forced) on the synthetic web-page table at $SPARK_GRAFT_SF_DIR
-(default sf0.1), local[$SPARK_GRAFT_CPUS].
+(default sf0.1), local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on).
 
 --scaling runs the same validation job at a ladder of parallelism
 levels (default local[2,4,8,16], separate JVMs, standing in for N vs 4N
@@ -22,7 +23,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from spark_schema_guard.session import available_cpus  # noqa: E402
+
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", available_cpus()))
 
 
 def _sf_of(path: str) -> float:

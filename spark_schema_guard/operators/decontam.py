@@ -19,6 +19,8 @@ near-unique so the join key carries no skew.
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,23 +29,26 @@ from pyspark.sql import types as T
 
 from .textstats import word_ngram_stack
 
-# Live bench-matrix broadcast handles from embedding_decontaminate
-# calls (ADVICE-r04): each holds tens of MB on executors until GC of
-# the Python handle happens to release it.  Long-running sessions that
-# issue many decontamination passes should call
+# Weak references to the bench-matrix broadcasts of
+# embedding_decontaminate calls: the returned frame holds its broadcast
+# alive, and once the caller drops the frame the handle is collectable
+# as before (the JVM ContextCleaner then reclaims it).  Long-running
+# sessions that issue many decontamination passes can instead call
 # release_bench_broadcasts() once the output frames are materialized.
-_BENCH_BROADCASTS: list = []
+_BENCH_BROADCASTS: list[weakref.ref] = []
 
 
 def release_bench_broadcasts() -> int:
-    """Destroy every bench-matrix broadcast created by
+    """Destroy every still-live bench-matrix broadcast created by
     :func:`embedding_decontaminate` in this process and return how many
     were released.  Only call AFTER the returned frames have been fully
     materialized (written/collected) — a destroyed broadcast breaks any
     still-lazy plan that references it."""
     n = 0
     while _BENCH_BROADCASTS:
-        bc = _BENCH_BROADCASTS.pop()
+        bc = _BENCH_BROADCASTS.pop()()
+        if bc is None:
+            continue
         try:
             bc.destroy()
             n += 1
@@ -173,7 +178,7 @@ def embedding_decontaminate(
     # can reclaim executor memory with release_bench_broadcasts()
     # (destroying it eagerly here would break the returned lazy frame).
     bc = df.sparkSession.sparkContext.broadcast((B, bnorm))
-    _BENCH_BROADCASTS.append(bc)
+    _BENCH_BROADCASTS.append(weakref.ref(bc))
 
     def score(batches):
         Bm, Bn = bc.value
@@ -197,7 +202,9 @@ def embedding_decontaminate(
             out.loc[~valid, ["n_bench_matches", "contaminated"]] = pd.NA
             yield out
 
-    return (df.select(F.col(id_col).alias("__id"),
-                      F.col(vec_col).cast("array<double>").alias("__v"))
-            .mapInPandas(score, schema)
-            .withColumnRenamed("__id", id_col))
+    out = (df.select(F.col(id_col).alias("__id"),
+                     F.col(vec_col).cast("array<double>").alias("__v"))
+           .mapInPandas(score, schema)
+           .withColumnRenamed("__id", id_col))
+    out._ssg_bench_broadcast = bc  # live exactly as long as the frame
+    return out

@@ -118,20 +118,28 @@ def chi_square_by_unit(
         (F.col("_n_values") - 1).alias("dof"))
 
 
+def _double_sql(x: float) -> str:
+    """A double as Spark SQL text.  A bare ``1.5`` parses as DECIMAL, so
+    every value goes through ``CAST('<repr>' AS DOUBLE)``: ``repr`` is the
+    shortest string that round-trips, and Spark parses it back to the
+    same double (``inf``, ``-inf`` and ``nan`` included)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
 def _grid_bucket(grid: list) -> Column:
     """Bucket index of ``v`` on a sorted grid = count of grid points
-    <= v, as a codegen'd WHEN chain.  The obvious
+    <= v, as a codegen'd CASE WHEN chain.  The obvious
     ``size(filter(grid_array, q -> q <= v))`` is a higher-order
     function — CodegenFallback on the one DATA-SIZED stage of the KS
     grid path (the repo's measured HOF invariant); the chain is
     A/B-measured 2.1x faster on the 2M-row bench leg.  Ties and NaN
     agree with the filter form (NaN sorts above every grid point ->
-    last bucket).  Grid sizes are bounded (<= grid_size), so the chain
-    stays a few hundred expression nodes."""
-    chain = F.when(F.col("v") < F.lit(float(grid[0])), F.lit(0))
-    for i in range(1, len(grid)):
-        chain = chain.when(F.col("v") < F.lit(float(grid[i])), F.lit(i))
-    return chain.otherwise(F.lit(len(grid)))
+    last bucket).  The chain is emitted as ONE SQL text: built Column by
+    Column, its ~256 branches cost 0.8-1.1 s of py4j round trips per
+    call on a 4-core VM, against a few ms as one text."""
+    branches = " ".join(f"WHEN `v` < {_double_sql(q)} THEN {i}"
+                        for i, q in enumerate(grid))
+    return F.expr(f"CASE {branches} ELSE {len(grid)} END")
 
 
 def ks_by_unit(

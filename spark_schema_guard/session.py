@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def available_cpus() -> int:
+    """CPUs this process may run on (its affinity mask where the OS has
+    one), the default ``local[N]`` width."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def build_session(
     app_name: str = "spark-schema-guard",
     cores: int | None = None,
@@ -19,7 +27,7 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", available_cpus()))
     if shuffle_partitions is None:
         # one-to-two shuffle partitions per core locally; on a cluster this
         # is overridden to ~2-3x total executor cores

@@ -68,7 +68,7 @@ def test_path_refs_still_parquet(spark, tmp_path):
     assert try_read_table(spark, str(tmp_path / "missing")) is None
 
 
-def test_audited_run_against_catalog_audit_table(spark, tmp_path):
+def test_audited_run_against_catalog_audit_table(spark, tmp_path, scans_of):
     """Full resumable validation with the audit table living in the
     catalog (the Iceberg shape) instead of a parquet path."""
     import spark_schema_guard as ssg
@@ -96,8 +96,10 @@ def test_audited_run_against_catalog_audit_table(spark, tmp_path):
     # resume: everything already validated -> zero pending units
     run2 = AuditedRun(spark, plan, input_path, audit_table, run_id="r2")
     assert run2.pending_input().count() == 0
-    summary2 = run2.run()
+    summary2, scans, _ = scans_of(input_path, run2.run)
     assert summary2["rows"] == 0
+    assert summary2["units_validated"] == 0
+    assert scans == 0  # completed files are never opened
 
     audit = read_table(spark, audit_table)
     assert audit.where(F.col("run_id") == "r1").count() == 4

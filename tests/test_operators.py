@@ -199,6 +199,41 @@ def test_ks_exact_and_grid(spark):
     assert ks_drift(same, "v", "g", mode="exact").collect()[0]["statistic"] <= 0.02 + 1e-9
 
 
+def test_grid_bucket_sql_matches_column_chain(spark):
+    """The one-call SQL CASE WHEN buckets every value exactly like the
+    Column-by-Column WHEN chain it replaced: ties at grid points, values
+    with no exact decimal form (0.1), NaN, ±inf and -0.0."""
+    from spark_schema_guard.operators.drift import _grid_bucket
+
+    inf, nan = float("inf"), float("nan")
+    grid = [-1e300, -2.5, -0.0, 0.1, 0.30000000000000004, 1.0 / 3.0, 1.5,
+            2.0 ** 60, 1e300]
+
+    def column_chain(grid):
+        chain = F.when(F.col("v") < F.lit(float(grid[0])), F.lit(0))
+        for i in range(1, len(grid)):
+            chain = chain.when(F.col("v") < F.lit(float(grid[i])), F.lit(i))
+        return chain.otherwise(F.lit(len(grid)))
+
+    values = grid + [0.1 + 0.2, 0.1 * 3, 0.3, 0.0, 5e-324, -5e-324,
+                     2.0 ** 60 + 512, 1.4999999999999998, inf, -inf, nan,
+                     None]
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    got = df.select("v", _grid_bucket(grid).alias("sql"),
+                    column_chain(grid).alias("chain")).collect()
+    assert all(r["sql"] == r["chain"] for r in got), got
+    bucket = {i: r["sql"] for i, r in enumerate(got)}
+    assert bucket[values.index(0.1)] == 4          # tie: counts 0.1 itself
+    assert bucket[values.index(nan)] == len(grid)  # NaN sorts above all
+    assert bucket[values.index(inf)] == len(grid)
+    assert bucket[values.index(-inf)] == 0
+    # a grid holding the special values themselves
+    special = [-inf, 0.1, inf, nan]
+    got = df.select(_grid_bucket(special).alias("sql"),
+                    column_chain(special).alias("chain")).collect()
+    assert all(r["sql"] == r["chain"] for r in got), got
+
+
 def test_exact_duplicates(spark):
     df = spark.createDataFrame(
         [(1, "aaa"), (2, "bbb"), (3, "aaa"), (4, "ccc"), (5, "aaa")],

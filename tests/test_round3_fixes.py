@@ -159,6 +159,15 @@ def test_audit_unit_prefers_metadata_and_rejects_empty(spark, tmp_path):
                       str(tmp_path / "audit2"), run_id="r2")
     with pytest.raises(Exception, match="audit unit is empty"):
         run2.pending_input().collect()
+    # run() too: a source that lists no files never takes the
+    # nothing-pending exit, with or without completed units on record
+    with pytest.raises(Exception, match="audit unit is empty"):
+        run2.run()
+    run.run()
+    run3 = AuditedRun(spark, plan, "ssg_r3_no_files",
+                      str(tmp_path / "audit"), run_id="r3")
+    with pytest.raises(Exception, match="audit unit is empty"):
+        run3.run()
     spark.catalog.dropTempView("ssg_r3_no_files")
 
 

@@ -86,6 +86,22 @@ def test_max_bucket_rejects_garbage(spark):
     assert _cap_buckets(df, "bucket", "auto", n_buckets=4).count() == 5
 
 
+def test_max_bucket_accepts_numpy_integers(spark):
+    from spark_schema_guard.operators.similarity import (
+        _cap_buckets, _validate_max_bucket)
+
+    assert _validate_max_bucket(np.int64(3)) == 3
+    assert type(_validate_max_bucket(np.int32(3))) is int
+    for bad in (np.bool_(True), np.float64(3.0), "3", b"3", False):
+        with pytest.raises(ValueError, match="max_bucket"):
+            _validate_max_bucket(bad)
+    with pytest.raises(ValueError, match="positive"):
+        _validate_max_bucket(np.int64(0))
+    df = spark.range(6).select((F.col("id") % 2).alias("bucket"))
+    assert _cap_buckets(df, "bucket", np.int64(3)).count() == 6
+    assert _cap_buckets(df, "bucket", np.int64(2)).count() == 0
+
+
 # --- ADVICE-r04 (medium): the auto cap is reported, not silent --------------
 
 
@@ -156,6 +172,38 @@ def test_release_bench_broadcasts(spark):
     got = {r["doc_id"]: r["contaminated"] for r in out.collect()}
     assert got == {1: True, 2: False}
     assert decontam.release_bench_broadcasts() >= 1
+    assert decontam._BENCH_BROADCASTS == []
+
+
+def test_bench_broadcasts_are_weakly_held(spark):
+    """The registry holds weak references: the returned frame keeps its
+    broadcast alive, and once the frame is dropped the handle is
+    collectable and release_bench_broadcasts() skips the dead entry."""
+    import gc
+    import weakref
+
+    from spark_schema_guard.operators import decontam
+
+    decontam.release_bench_broadcasts()
+    docs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "doc_id long, v array<double>")
+    bench = spark.createDataFrame([([1.0, 0.0],)], "bv array<double>")
+
+    def decontaminate():
+        return decontam.embedding_decontaminate(
+            docs, "doc_id", "v", bench, "bv", threshold=0.99)
+
+    kept, dropped = decontaminate(), decontaminate()
+    assert all(isinstance(r, weakref.ref) for r in decontam._BENCH_BROADCASTS)
+    assert len(decontam._BENCH_BROADCASTS) == 2
+    del dropped
+    gc.collect()
+    live = [r() for r in decontam._BENCH_BROADCASTS]
+    assert sum(bc is not None for bc in live) == 1
+    del live
+    assert {r["doc_id"]: r["contaminated"] for r in kept.collect()} == {
+        1: True, 2: False}
+    assert decontam.release_bench_broadcasts() == 1  # only the live one
     assert decontam._BENCH_BROADCASTS == []
 
 
